@@ -16,12 +16,10 @@ Design — the filter IS a distributed table, never driver-resident:
   via a full-outer join on pid + an Arrow-batched binary OR. The bit matrix
   NEVER materializes on the driver: the only driver transfer in add() is
   one scalar row count. At 10^10 keys (~12 GB of bits) nothing round-trips.
-- probe, scale path (``maybe_seen_flag_cogrouped``): candidates shuffle by
-  pid and cogroup against the bitset table — each of the P partition arrays
-  travels exactly once, to the task that owns that url_hash range
-- probe, small path (``maybe_seen_flag``): the table is collected once and
-  broadcast; right when the filter fits comfortably in executor memory
-  (sandbox sizes), wrong at 10^10 keys — use the cogroup probe there
+- probe (``maybe_seen_flag``): candidates shuffle by pid and cogroup
+  against the bitset table — each of the P partition arrays travels
+  exactly once, to the task that owns that url_hash range; no driver or
+  broadcast copy of the bit matrix exists at any size
 - persistence: ``to_df`` returns the table itself (plus scalar meta
   columns) so a snapshot commit writes it directly; ``from_df`` re-roots
   the table on the loaded parquet — neither direction collects bitsets
@@ -95,39 +93,7 @@ class PartitionedBloom:
         self.k = max(1, int(round(bits_per_key * math.log(2))))
         self.n_added = 0
         self._table: DataFrame | None = None  # (pid, bitset) — authoritative
-        self._bits_local: np.ndarray | None = None  # small-path cache
-        self._bc = None  # cached broadcast of the local matrix
         self._last_flagged: DataFrame | None = None  # prefilter persist slot
-
-    # -- local mirror (small-filter path ONLY — tests + broadcast probe) ----
-    @property
-    def bits(self) -> np.ndarray:
-        """Driver-side matrix view. Collects the table ON DEMAND — the
-        engine's hot paths (add / cogroup probe / persist) never touch it;
-        it exists for the broadcast probe and equality tests at sandbox
-        sizes."""
-        if self._bits_local is None:
-            bits = np.zeros((self.P, self.m // 8), dtype=np.uint8)
-            if self._table is not None:
-                for r in self._table.collect():
-                    bits[int(r["pid"])] = np.frombuffer(bytes(r["bitset"]),
-                                                        dtype=np.uint8)
-            self._bits_local = bits
-        return self._bits_local
-
-    def _broadcast(self, spark: SparkSession):
-        if self._bc is None:
-            self._bc = spark.sparkContext.broadcast(self.bits)
-        return self._bc
-
-    def _invalidate_caches(self) -> None:
-        self._bits_local = None
-        if self._bc is not None:
-            try:
-                self._bc.unpersist()
-            except Exception:
-                pass
-            self._bc = None
 
     # -- hashing (JVM-side) -------------------------------------------------
     def _with_hashes(self, df: DataFrame, col: str) -> DataFrame:
@@ -135,9 +101,6 @@ class PartitionedBloom:
                 .withColumn("_h1", F.xxhash64(F.col(col)))
                 .withColumn("_h2", F.hash(F.col(col)).cast("long"))
                 .withColumn("_pid", F.pmod(F.hash(F.col(col)), F.lit(self.P))))
-
-    def _probe_positions(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        return _positions(h1, h2, self.m, self.k)
 
     def _table_or_empty(self, spark: SparkSession) -> DataFrame:
         if self._table is not None:
@@ -189,13 +152,12 @@ class PartitionedBloom:
         self._table = merged.localCheckpoint(eager=True)
         batch.unpersist()
         self.n_added += total
-        self._invalidate_caches()
         return total
 
     def rebase(self, table_df: DataFrame) -> None:
         """Re-root the bitset table on a just-committed parquet snapshot
         (releases the executor-side checkpoint blocks; the bits are
-        unchanged, so probe caches stay valid)."""
+        unchanged, so n_added and every probe answer stay as they were)."""
         self._table = table_df.select("pid", "bitset")
 
     # -- capacity planning ---------------------------------------------------
@@ -224,8 +186,6 @@ class PartitionedBloom:
         out.k = self.k
         out.n_added = 0
         out._table = None
-        out._bits_local = None
-        out._bc = None
         out._last_flagged = None
         return out
 
@@ -234,34 +194,11 @@ class PartitionedBloom:
                         col: str = "url",
                         flag: str = "_maybe_seen") -> DataFrame:
         """Adds a boolean column: False ⇒ definitively never seen.
-        Broadcast probe — the SMALL-filter path (collects the table once,
-        cached until the next add). Use the cogroup probe at web scale."""
-        m, k = self.m, self.k
-        bc = self._broadcast(spark)
-
-        @F.pandas_udf(T.BooleanType())
-        def test(h1: pd.Series, h2: pd.Series, pid: pd.Series) -> pd.Series:
-            bits = bc.value
-            pos = _positions(h1.to_numpy(), h2.to_numpy(), m, k)  # (n, k)
-            pid_np = pid.to_numpy()
-            byte = bits[pid_np[:, None], pos >> 3]
-            hit = (byte & (1 << (pos & 7)).astype(np.uint8)) != 0
-            return pd.Series(hit.all(axis=1))
-
-        return (self._with_hashes(df, col)
-                .withColumn(flag, test(F.col("_h1"), F.col("_h2"), F.col("_pid")))
-                .drop("_h1", "_h2", "_pid"))
-
-    def maybe_seen_flag_cogrouped(self, spark: SparkSession, df: DataFrame,
-                                  col: str = "url",
-                                  flag: str = "_maybe_seen") -> DataFrame:
-        """Co-partitioned probe — the scale path: no driver or broadcast
-        copy of the bit matrix. Candidates shuffle by pid and each task
+        Co-partitioned probe: candidates shuffle by pid and each task
         receives ONLY its own partition's bit array via cogroup against the
-        bitset TABLE. At 10^10 keys (~12 GB of bits) the broadcast probe
-        would ship the full matrix to every executor; here each of the P
-        partition arrays travels exactly once, to the task that owns that
-        url_hash range. Result is identical to ``maybe_seen_flag``."""
+        bitset TABLE — no driver or broadcast copy of the bit matrix. At
+        10^10 keys (~12 GB of bits) each of the P partition arrays travels
+        exactly once, to the task that owns that url_hash range."""
         m, k = self.m, self.k
         orig_cols = [f.name for f in df.schema.fields]
         out_schema = T.StructType(list(df.schema.fields) +
@@ -290,13 +227,12 @@ class PartitionedBloom:
 
     def prefilter(self, spark: SparkSession, candidates: DataFrame,
                   col: str, seen: DataFrame,
-                  method: str = "broadcast",
                   verify: str = "shuffle") -> DataFrame:
         """Exact dedup with Bloom short-circuit: returns candidates NOT in
         ``seen`` — identical result to a plain left_anti join (no false
         negatives), but only Bloom-positive rows reach the verify join.
-        ``method="cogroup"`` probes via the co-partitioned bitset table
-        (scale path, no full-matrix broadcast).
+        The probe is ``maybe_seen_flag`` (cogroup against the bitset
+        table; the bit matrix never leaves the executors).
 
         ``verify`` picks the exact-verify join strategy:
         - "shuffle" (default): plain left_anti — right when suspects are a
@@ -321,11 +257,7 @@ class PartitionedBloom:
         The engine always localCheckpoints new_rows first
         (crawler.run_cycle) — external callers must do the same."""
         self.release()
-        if method == "cogroup":
-            flagged = self.maybe_seen_flag_cogrouped(
-                spark, candidates, col).persist()
-        else:
-            flagged = self.maybe_seen_flag(spark, candidates, col).persist()
+        flagged = self.maybe_seen_flag(spark, candidates, col).persist()
         self._last_flagged = flagged
         definite_new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
         suspects = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
@@ -387,58 +319,23 @@ class PartitionedBloom:
         obj.n_added = int(meta["n_added"])
         obj.P = int(meta["p"]) if "p" in df.columns else int(df.count())
         obj._table = df.select("pid", "bitset").localCheckpoint(eager=True)
-        obj._bits_local = None
-        obj._bc = None
         obj._last_flagged = None
         return obj
 
-    # small-scale helpers kept for tests / offline inspection
-    def to_pandas(self) -> pd.DataFrame:
-        bits = self.bits
-        return pd.DataFrame({
-            "pid": np.arange(self.P, dtype=np.int32),
-            "bitset": [bits[p].tobytes() for p in range(self.P)],
-            "m": np.full(self.P, self.m, dtype=np.int64),
-            "k": np.full(self.P, self.k, dtype=np.int64),
-            "n_added": np.full(self.P, self.n_added, dtype=np.int64),
-        })
 
-    @classmethod
-    def from_pandas(cls, pdf: pd.DataFrame) -> "PartitionedBloom":
-        P = len(pdf)
-        m = int(pdf["m"].iloc[0])
-        obj = cls.__new__(cls)
-        obj.P, obj.m = P, m
-        obj.k = int(pdf["k"].iloc[0])
-        obj.n_added = int(pdf["n_added"].iloc[0])
-        obj._table = None
-        obj._bc = None
-        obj._last_flagged = None
-        bits = np.zeros((P, m // 8), dtype=np.uint8)
-        for _, r in pdf.iterrows():
-            bits[int(r["pid"])] = np.frombuffer(r["bitset"], dtype=np.uint8)
-        obj._bits_local = bits
-        return obj
-
-    def fp_rate_estimate(self) -> float:
-        """Expected false-positive rate from current fill factor, computed
-        distributedly (per-row popcount fraction, averaged over all P
-        partitions — absent pids are zero-fill)."""
-        if self._table is None:
-            if self._bits_local is not None:  # from_pandas-restored
-                return float(np.unpackbits(self._bits_local).mean()) ** self.k
-            return 0.0
-
-        @F.pandas_udf(T.DoubleType())
-        def fill_frac(b: pd.Series) -> pd.Series:
-            return pd.Series([
-                float(np.unpackbits(np.frombuffer(x, dtype=np.uint8)).mean())
-                if x is not None else 0.0 for x in b])
-
-        row = (self._table
-               .agg(F.sum(fill_frac(F.col("bitset"))).alias("s")).first())
-        s = float(row["s"]) if row["s"] is not None else 0.0
-        return (s / self.P) ** self.k
+def _cuckoo_index(hs: np.ndarray, n_buckets: int
+                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Vectorized partial-key cuckoo index of uint64 hashes:
+    (16-bit fingerprint, first bucket, alternate bucket). ``n_buckets`` is
+    a power of two (both filters build it as ``1 << k``), so bucket
+    reduction is a mask — ~10x cheaper than uint64 ``%`` at 10^6 keys and
+    identical to the scalar ``CuckooFilter._buckets``."""
+    mask = np.uint64(n_buckets - 1)
+    fp = ((hs >> np.uint64(32)) & np.uint64(0xFFFF)).astype(np.uint16)
+    fp[fp == 0] = 1
+    i1 = hs & mask
+    i2 = (i1 ^ (fp.astype(np.uint64) * np.uint64(0x5BD1E995))) & mask
+    return fp, i1.astype(np.int64), i2.astype(np.int64)
 
 
 class CuckooFilter:
@@ -497,21 +394,7 @@ class CuckooFilter:
         hs = np.asarray(hs, dtype=np.uint64)
         if not len(hs):
             return 0
-        nb = np.uint64(self.n_buckets)
-        pow2 = (self.n_buckets & (self.n_buckets - 1)) == 0
-        bmask = np.uint64(self.n_buckets - 1)
-
-        def _reduce(x: np.ndarray) -> np.ndarray:
-            # n_buckets is a power of two from the constructor; & is ~10x
-            # cheaper than uint64 % at 10^6 keys
-            return (x & bmask) if pow2 else (x % nb)
-
-        fp = ((hs >> np.uint64(32)) & np.uint64(0xFFFF)).astype(np.uint16)
-        fp = np.where(fp == 0, np.uint16(1), fp)
-        i1 = _reduce(hs).astype(np.int64)
-        i2 = _reduce(i1.astype(np.uint64)
-                     ^ (fp.astype(np.uint64) * np.uint64(0x5BD1E995))
-                     ).astype(np.int64)
+        fp, i1, i2 = _cuckoo_index(hs, self.n_buckets)
         pending = np.arange(len(hs))
         n_ok = 0
         for buckets in (i1, i2):
@@ -569,19 +452,7 @@ class CuckooFilter:
         hs = np.asarray(hs, dtype=np.uint64)
         if not len(hs):
             return 0
-        nb = np.uint64(self.n_buckets)
-        pow2 = (self.n_buckets & (self.n_buckets - 1)) == 0
-        bmask = np.uint64(self.n_buckets - 1)
-
-        def _reduce(x: np.ndarray) -> np.ndarray:
-            return (x & bmask) if pow2 else (x % nb)
-
-        fp = ((hs >> np.uint64(32)) & np.uint64(0xFFFF)).astype(np.uint16)
-        fp = np.where(fp == 0, np.uint16(1), fp)
-        i1 = _reduce(hs).astype(np.int64)
-        i2 = _reduce(i1.astype(np.uint64)
-                     ^ (fp.astype(np.uint64) * np.uint64(0x5BD1E995))
-                     ).astype(np.int64)
+        fp, i1, i2 = _cuckoo_index(hs, self.n_buckets)
         pending = np.arange(len(hs))
         n_ok = 0
         for buckets in (i1, i2):
@@ -761,13 +632,8 @@ class PartitionedCuckoo:
                 return out
             slots = np.frombuffer(slots_pdf["slots"].iloc[0],
                                   dtype=np.uint16).reshape(nb, 4)
-            h = cand["_h"].to_numpy().astype(np.uint64)
-            fp = ((h >> np.uint64(32)) & np.uint64(0xFFFF)).astype(np.uint16)
-            fp = np.where(fp == 0, np.uint16(1), fp)
-            i1 = (h % np.uint64(nb)).astype(np.int64)
-            i2 = ((i1.astype(np.uint64) ^
-                   (fp.astype(np.uint64) * np.uint64(0x5BD1E995)))
-                  % np.uint64(nb)).astype(np.int64)
+            fp, i1, i2 = _cuckoo_index(
+                cand["_h"].to_numpy().astype(np.uint64), nb)
             hit = ((slots[i1] == fp[:, None]).any(axis=1)
                    | (slots[i2] == fp[:, None]).any(axis=1))
             out[flag] = hit

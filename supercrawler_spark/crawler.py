@@ -46,23 +46,7 @@ from __future__ import annotations
 
 import math
 import os
-import time
 from dataclasses import dataclass, field
-
-_PROFILE = bool(os.environ.get("SC_PROFILE"))
-
-
-class _Phase:
-    """Per-cycle phase timer (enabled via SC_PROFILE=1)."""
-
-    def __init__(self):
-        self.t = time.time()
-
-    def mark(self, label: str) -> None:
-        if _PROFILE:
-            now = time.time()
-            print(f"    [{label}] {now - self.t:.2f}s", flush=True)
-            self.t = now
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -231,10 +215,6 @@ class CrawlConfig:
     use_bloom: bool = False              # Bloom-prefiltered dedup (scale path)
     bloom_partitions: int = 32
     bloom_capacity: int = 1 << 20
-    bloom_probe: str = "cogroup"         # "cogroup" (scale default: no full-
-    # matrix broadcast — each task gets only its url_hash range's bit array,
-    # and the per-cycle add never re-collects the table) | "broadcast"
-    # (small-filter fast path: table collected once per add and broadcast)
     bloom_rebuild_fpr: float | None = 0.05
     # capacity planning for 10^10-key frontiers: after every bloom add the
     # engine checks the analytic fp_rate_estimate; above this threshold the
@@ -677,9 +657,7 @@ class SparkCrawler:
         Crawler.js:196-201)."""
         cfg = self.config
         stats = CycleStats(cycle_id=self.cycle_id)
-        ph = _Phase()
         frame, n_popped = self._pop_batch()
-        ph.mark('pop')
         stats.popped = n_popped
         if not n_popped:
             stats.events.append(("urllistempty", None))
@@ -711,7 +689,6 @@ class SparkCrawler:
                           .agg(F.min("batch_idx").alias("first_idx"))
                           .orderBy("first_idx").collect())]
             robots_inserts = self._refresh_robots(key_firsts)
-        ph.mark('robots')
 
         batch_df = frame.select(
             "batch_idx", "url",
@@ -853,14 +830,12 @@ class SparkCrawler:
         # it as DataFrame lineage; the driver collects only the per-cycle
         # scalar counters. Full rows cross to the driver ONLY when
         # collect_events asks for the facade's per-URL event payloads.
-        ph.mark('plan2')
         results = (results
                    .select("batch_idx", "url", "num_errors", "status_out",
                            "error_code", "error_message", "f_location")
                    .persist())
         if cfg.collect_events:
             stats.results = [r.asDict() for r in results.collect()]
-        ph.mark('results_collect')
 
         # --- ordered insert list: robots enqueues then discovered links -----
         # (robots URL enqueued BEFORE the page's own links — Crawler.js:463-465)
@@ -876,9 +851,7 @@ class SparkCrawler:
                 ])).withColumn("source_order", F.lit(0))
             links_all = robots_links.unionByName(links_all)
 
-        ph.mark('plan')
         n_links = links_all.count()
-        ph.mark('links_count')
         stats.links_found = int(n_links) - len(robots_inserts)
 
         if n_links:
@@ -905,8 +878,7 @@ class SparkCrawler:
                 # suspects are politeness-bounded → broadcast verify (the
                 # frontier streams, never shuffles)
                 links_unique = self._bloom.prefilter(self.spark, links_unique, "url",
-                                                     seen, method=cfg.bloom_probe,
-                                                     verify="broadcast")
+                                                     seen, verify="broadcast")
             else:
                 links_unique = self._minus_seen(links_unique, seen)
             if self.plan_sink is not None:
@@ -1019,7 +991,6 @@ class SparkCrawler:
                         else frame.select("url")
                                   .unionByName(new_rows.select("url")))
         self._apply_changes(changes, keys=changed_keys)
-        ph.mark('checkpoint')
         # the delta checkpoint materialized new_rows — read back the new max
         # seq from the (small) delta instead of scanning the frontier
         new_max = self._delta.agg(F.max("seq").alias("m")).collect()[0]["m"]
@@ -1031,7 +1002,6 @@ class SparkCrawler:
         if self._bloom is not None and n_new and new_rows is not None:
             self._bloom.add(self.spark, new_rows.select("url"))
             self._maybe_rebuild_bloom()
-        ph.mark('seq_agg')
         kernel_out.unpersist()
         found.unpersist()
         if new_rows is not None:

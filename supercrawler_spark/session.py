@@ -2,9 +2,11 @@
 
 Tuned for the crawl workload: AQE on (runtime coalescing + skew-join
 splitting stands in for hot-host handling at cluster scale — SURVEY.md O12),
-Arrow enabled for every pandas UDF / mapInPandas stage, and shuffle
-partitions sized for the sandbox (32 cores). On a real cluster these come
-from spark-submit conf; nothing here is sandbox-specific logic.
+Arrow enabled for every pandas UDF / mapInPandas stage, and the local
+master, shuffle partitions and driver heap sized from the host (all
+cores; 40% of physical memory, capped at 32g). SPARK_GRAFT_CPUS,
+SPARK_MASTER, SPARK_SHUFFLE_PARTITIONS and SPARK_DRIVER_MEM override them;
+on a real cluster they come from spark-submit conf.
 """
 
 from __future__ import annotations
@@ -86,10 +88,18 @@ def _warm_session(spark: SparkSession) -> None:
     spark.conf.set("spark.supercrawler.warmed", "1")
 
 
+def _default_driver_mem() -> str:
+    """40% of physical memory, capped at 32g: the local-mode driver JVM
+    also hosts every executor, and the Python workers, the page cache and
+    other processes need the rest of the box."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(32 << 10, int(phys * 0.4) >> 20)}m"
+
+
 def get_spark(app_name: str = "supercrawler-spark", master: str | None = None,
               shuffle_partitions: int | None = None, extra_conf: dict | None = None
               ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
@@ -115,7 +125,8 @@ def get_spark(app_name: str = "supercrawler-spark", master: str | None = None,
         # runtime bloom on join keys complements our persisted seen-filter
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

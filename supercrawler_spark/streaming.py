@@ -207,8 +207,7 @@ def streaming_link_ingest(spark: SparkSession, links_dir: str,
                 e.endswith(".parquet") for e in os.listdir(out_dir)):
             seen_all = seen_all.unionByName(
                 spark.read.parquet(out_dir).select("url"))
-        new = bloom.prefilter(spark, cand, "url", seen_all,
-                              method="cogroup", verify="broadcast")
+        new = bloom.prefilter(spark, cand, "url", seen_all, verify="broadcast")
         new = new.persist()
         if new.count():
             new.write.mode("append").parquet(out_dir)

@@ -1,7 +1,7 @@
 """Partitioned Bloom seen-filter: exactness vs plain anti-join + cuckoo."""
 
-import numpy as np
-import pandas as pd
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -42,15 +42,6 @@ def test_bloom_no_false_negatives_and_low_fpr(spark, url_sets):
     assert bloom.fp_rate_estimate() < 0.05
 
 
-def test_bloom_roundtrip_persistence(spark, url_sets):
-    seen, cand = url_sets
-    bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
-    bloom.add(spark, seen)
-    restored = PartitionedBloom.from_pandas(bloom.to_pandas())
-    assert np.array_equal(bloom.bits, restored.bits)
-    assert (restored.P, restored.m, restored.k) == (bloom.P, bloom.m, bloom.k)
-
-
 def test_crawler_with_bloom_matches_without(spark):
     import tempfile
 
@@ -74,37 +65,15 @@ def test_crawler_with_bloom_matches_without(spark):
 
 
 def test_cogroup_prefilter_equals_exact_antijoin(spark, url_sets):
-    """The co-partitioned (no-broadcast) probe returns the identical set."""
+    """The co-partitioned probe under the crawl cycle's broadcast verify
+    returns the identical set."""
     seen, cand = url_sets
     bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
     bloom.add(spark, seen)
     got = {r["url"] for r in bloom.prefilter(
-        spark, cand, "url", seen, method="cogroup").collect()}
+        spark, cand, "url", seen, verify="broadcast").collect()}
     want = {r["url"] for r in cand.join(seen, "url", "left_anti").collect()}
     assert got == want
-
-
-def test_cogroup_flag_equals_broadcast_flag(spark, url_sets):
-    seen, cand = url_sets
-    bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
-    bloom.add(spark, seen)
-    a = bloom.maybe_seen_flag(spark, cand, "url").toPandas() \
-             .set_index("url")["_maybe_seen"]
-    b = bloom.maybe_seen_flag_cogrouped(spark, cand, "url").toPandas() \
-             .set_index("url")["_maybe_seen"]
-    assert a.sort_index().equals(b.sort_index())
-
-
-def test_broadcast_cached_until_add(spark, url_sets):
-    seen, cand = url_sets
-    bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
-    bloom.add(spark, seen)
-    bloom.maybe_seen_flag(spark, cand, "url").count()
-    bc1 = bloom._bc
-    bloom.maybe_seen_flag(spark, cand, "url").count()
-    assert bloom._bc is bc1          # reused across probe calls
-    bloom.add(spark, cand.limit(10))
-    assert bloom._bc is None         # invalidated by the add
 
 
 def test_bloom_resume_restores_seen_filter(spark):
@@ -167,9 +136,10 @@ def test_cuckoo_insert_lookup_delete():
 
 
 def test_add_never_ships_bitsets_to_driver(spark, url_sets):
-    """The distributed build/merge contract: add() may collect scalars (the
-    row count) but NEVER a frame containing a binary bitset column — at
-    10^10 keys the bit matrix is ~12 GB and must stay executor-side."""
+    """The distributed build/merge/probe contract: add() may collect
+    scalars (the row count) but NEVER a frame containing a binary bitset
+    column, and the probe collects only the candidates plus their flag —
+    at 10^10 keys the bit matrix is ~12 GB and must stay executor-side."""
     from pyspark.sql import DataFrame
     from pyspark.sql import types as T
 
@@ -192,6 +162,7 @@ def test_add_never_ships_bitsets_to_driver(spark, url_sets):
     try:
         n = bloom.add(spark, seen)
         bloom.add(spark, cand)  # second add exercises the OR-merge join
+        flagged = bloom.maybe_seen_flag(spark, cand, "url").toPandas()
     finally:
         DataFrame.collect, DataFrame.toPandas = orig_collect, orig_topandas
     assert n == 20000
@@ -200,7 +171,6 @@ def test_add_never_ships_bitsets_to_driver(spark, url_sets):
         for f in schema.fields if isinstance(f.dataType, T.BinaryType)]
     assert not binary_fields, f"bitset bytes crossed the driver: {binary_fields}"
     # and the merged filter still answers correctly (cand ⊂ filter now)
-    flagged = bloom.maybe_seen_flag_cogrouped(spark, cand, "url").toPandas()
     assert flagged["_maybe_seen"].all()
 
 
@@ -213,12 +183,17 @@ def test_to_df_from_df_roundtrip_is_distributed(spark, url_sets):
     restored = PartitionedBloom.from_df(bloom.to_df(spark))
     assert (restored.P, restored.m, restored.k, restored.n_added) == \
         (bloom.P, bloom.m, bloom.k, bloom.n_added)
-    a = bloom.maybe_seen_flag_cogrouped(spark, cand, "url").toPandas() \
+    a = bloom.maybe_seen_flag(spark, cand, "url").toPandas() \
              .set_index("url")["_maybe_seen"].sort_index()
-    b = restored.maybe_seen_flag_cogrouped(spark, cand, "url").toPandas() \
+    b = restored.maybe_seen_flag(spark, cand, "url").toPandas() \
                 .set_index("url")["_maybe_seen"].sort_index()
     assert a.equals(b)
-    assert np.array_equal(bloom.bits, restored.bits)
+
+    def rows(f):
+        return sorted((r["pid"], bytes(r["bitset"]))
+                      for r in f.to_df(spark).select("pid", "bitset").collect())
+
+    assert rows(bloom) == rows(restored)
 
 
 def test_prefilter_releases_previous_persist(spark, url_sets):
@@ -364,6 +339,23 @@ def test_bloom_fpr_estimate_and_grown_empty(spark):
                for r in f.prefilter(spark, cand, "url", urls).collect()}
         assert got == want
         f.release()
+
+
+def test_fp_rate_estimate_is_analytic_and_starts_no_job(spark, url_sets):
+    """The estimate runs after every crawl-cycle add and again for the
+    metrics row: it must be the O(1) driver-side formula
+    (1 - e^{-k·n/(P·m)})^k, never a scan of the bitset table."""
+    seen, _ = url_sets
+    bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
+    bloom.add(spark, seen)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    est = bloom.fp_rate_estimate()
+    assert sched.nextJobId() == before, "fp_rate_estimate started a Spark job"
+    want = (1.0 - math.exp(-bloom.k * bloom.n_added
+                           / (bloom.P * bloom.m))) ** bloom.k
+    assert est == pytest.approx(want, rel=1e-12)
+    assert 0.0 < est < 0.05
 
 
 def test_engine_rebuilds_saturated_bloom(spark, tmp_path):
